@@ -265,7 +265,18 @@ def asof_text_index(
     addendum), and a session touring snapshots pays
     delta-proportional cold per seq. Falls back to the from-scratch
     build when no earlier snapshot is cached (the first snapshot of
-    the session)."""
+    the session).
+
+    No cached as-of sidecar reads the serving log: Spark drops the
+    cached buffers of every persisted plan that reads a path it then
+    writes to, so a sidecar with ``serving.log_between`` in its
+    lineage is un-cached by the next drain into the log, and the next
+    read rebuilds the whole chain back to the first snapshot (or,
+    after ``serving.purge_log``, reads deleted partitions). The
+    advanced postings and stats are therefore materialized with an
+    eager ``localCheckpoint`` before they are cached, and the
+    from-scratch build reads the durable ``serving.state_as_of``
+    artifact."""
     import re
 
     from nucliadb_spark import serving
@@ -324,9 +335,10 @@ def asof_text_index(
             )
             # the advance derives stats incrementally too (kept rows
             # verbatim + delta stats) — hand them to the stats sidecar
-            # instead of re-deriving from the advanced postings
-            advanced["stats"] = stats2
-            return post2
+            # instead of re-deriving from the advanced postings. Both
+            # are checkpointed: the cached sidecar must not read the log
+            advanced["stats"] = stats2.localCheckpoint(eager=True)
+            return post2.localCheckpoint(eager=True)
         return bm25.postings(corpus_at(as_of))
 
     post = cached_df(sf_dir, f"asof{as_of}_text_post", build_post, spark=spark)
@@ -356,7 +368,8 @@ def asof_family_text_index(
     family per resource), so advance_text_index applies verbatim to
     the family-filtered log: untouched resources keep their S1
     family postings, touched ones re-tokenize from their final delta
-    version."""
+    version. Like the unscoped index, the chained sidecars are
+    checkpointed so none of them reads the serving log."""
     import re
 
     from nucliadb_spark import serving
@@ -425,8 +438,8 @@ def asof_family_text_index(
                 prior_stats,
                 fam_delta(s1, as_of),
             )
-            advanced["stats"] = stats2
-            return post2
+            advanced["stats"] = stats2.localCheckpoint(eager=True)
+            return post2.localCheckpoint(eager=True)
         return bm25.postings(fam_at(as_of))
 
     post = cached_df(sf_dir, f"asof{as_of}_f{slug}_post", build_post, spark=spark)
@@ -471,68 +484,38 @@ def asof_live_state(
     log_name: str | None = None,
 ) -> DataFrame:
     """A CDC family's live state AS OF a log seq, session-cached as
-    ``asof{seq}_{family}`` and CHAINED like the text index: the first
-    read at a NEW snapshot advances the nearest cached earlier
-    snapshot with only the delta ops (ingest.advance_live_state —
-    prior-state anti-join on touched keys ∪ the delta's own
-    latest-op-wins resolution) instead of re-resolving the full log.
-    This extends the delta-proportional cold-cost contract from the
-    text family to EVERY latest-op-wins plane the find API reads at a
-    snapshot — vectors, relations, labels, the fielded corpus — so a
-    session touring snapshots pays full-log cost once, not once per
-    (seq, family).
+    ``asof{seq}_{family}`` over the family's durable serving artifact
+    (:func:`serving.state_as_of`). A NEW snapshot is CHAINED: the
+    substrate advances the nearest durable earlier snapshot with only
+    the (prior, seq] partition-pruned delta (ingest.advance_live_state)
+    instead of re-resolving the full log, so a session touring
+    snapshots pays full-log cost once, not once per (seq, family) —
+    the delta-proportional cold-cost contract of the text index,
+    extended to every latest-op-wins plane the find API reads at a
+    snapshot (vectors, relations, labels, the fielded corpus).
 
-    r14: the cold path serves from the PHYSICAL substrate
-    (nucliadb_spark.serving): the family's op log is seq-bucket-
-    partitioned parquet (every cut is partition pruning), the state
-    resolves vacuum-aware from (base at the horizon, retained
-    partitions) via asof_from_vacuum, and the result is the family's
-    durable per-snapshot serving artifact. Reads below the family's
-    vacuum horizon raise the pinned-snapshot error — surfaced through
-    FindRequest because every as-of entry point routes here.
-    `log_name` names the physical log when families share one (the
-    embedding sidecar reads the content log)."""
-    import re
-
+    The cached frame reads the parquet artifact, never the serving
+    log: Spark drops the cached buffers of every persisted plan that
+    reads a path it then writes to, so a sidecar over the log would
+    be un-cached by each drain and recomputed from partitions a purge
+    may have deleted. Reads below the family's vacuum horizon raise
+    the pinned-snapshot error — surfaced through FindRequest because
+    every as-of entry point routes here. `log_name` names the
+    physical log when families share one (the embedding sidecar reads
+    the content log)."""
     from nucliadb_spark import serving
-    from nucliadb_spark.cache import cached_df, cached_names
+    from nucliadb_spark.cache import cached_df
 
-    from nucliadb_spark.streaming import ingest
-
-    lname = log_name or family
     serving.check_horizon(spark, sf_dir, family, as_of)
-    pat = re.compile(rf"asof(\d+)_{re.escape(family)}")
-
-    def state_at(seq: int) -> DataFrame:
-        return serving.state_as_of(
-            spark, sf_dir, family, log_builder, resolve, keys, seq,
-            log_name=lname,
-        )
-
-    def build() -> DataFrame:
-        hzn = serving.horizon(spark, sf_dir, family)
-        priors = [
-            int(m.group(1))
-            for n in cached_names(spark, sf_dir)
-            if (m := pat.fullmatch(n)) and hzn <= int(m.group(1)) < as_of
-        ]
-        if priors:
-            s1 = max(priors)  # nearest earlier snapshot → smallest delta
-            prior = cached_df(
-                sf_dir, f"asof{s1}_{family}", lambda: state_at(s1),
-                spark=spark,
-            )
-            return ingest.advance_live_state(
-                prior,
-                serving.log_between(
-                    spark, sf_dir, lname, log_builder, s1, as_of
-                ),
-                keys,
-                resolve,
-            )
-        return state_at(as_of)
-
-    return cached_df(sf_dir, f"asof{as_of}_{family}", build, spark=spark)
+    return cached_df(
+        sf_dir,
+        f"asof{as_of}_{family}",
+        lambda: serving.state_as_of(
+            spark, sf_dir, family, log_builder, resolve, keys, as_of,
+            log_name=log_name,
+        ),
+        spark=spark,
+    )
 
 
 # Request-plan memo (r15, guide §5 driver overhead): building a
@@ -799,24 +782,23 @@ def _build_find_request(
             scope_name = f"asof{as_of}_scope_rids:" + ",".join(
                 sorted(scoped_keys)
             )
-            scope_pinned = False  # snapshot-keyed: ages out with its seq
         else:
             scoped_fields = tpch.fields_multi(spark, sf_dir).filter(
                 F.col("field_key").isin(scoped_keys)
             )
             scope_name = "scope_rids:" + ",".join(sorted(scoped_keys))
-            scope_pinned = True  # live index membership, finite families
         # the owning-resource set of a field family is INDEX state
         # (the fielded postings sidecar's membership list), not
         # per-request work: without the sidecar every scoped request
         # re-ran the fields_multi scan + distinct once per leg that
-        # broadcasts it (r15, guide §2.4)
+        # broadcasts it (r15, guide §2.4). Unpinned: field names are
+        # request input, so one entry per combination must age out
+        # under the cache budget instead of growing the pinned set
         scope_rids = cached_df(
             sf_dir,
             scope_name,
             lambda: scoped_fields.select("rid").distinct(),
             spark=spark,
-            pinned=scope_pinned,
         )
 
     if (
@@ -1043,7 +1025,7 @@ def _build_find_request(
         else:
             if as_of is not None:
                 # the vector set AS OF the same seq: a new snapshot
-                # chains from the nearest cached one (delta advance),
+                # chains from the nearest durable one (delta advance),
                 # the first pays the seq-pruned scan + the same max_by
                 # the live vector CDC read pays
                 from nucliadb_spark.streaming import ingest
@@ -1092,7 +1074,7 @@ def _build_find_request(
             # values. Both served through asof_live_state like every
             # other as-of plane: repeated requests at the snapshot
             # read the cached sidecars, a new snapshot chains from
-            # the nearest cached one — full-log cost once per
+            # the nearest durable one — full-log cost once per
             # (seq, family), not once per request
             from nucliadb_spark.streaming import ingest
 
@@ -1151,7 +1133,7 @@ def _build_find_request(
             if as_of is not None:
                 # the relation set AS OF the same seq — edge-keyed
                 # max_by over the seq-cut edge op log; a new snapshot
-                # chains from the nearest cached one (delta advance)
+                # chains from the nearest durable one (delta advance)
                 from nucliadb_spark.streaming import ingest
 
                 rel = asof_live_state(

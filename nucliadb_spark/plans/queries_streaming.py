@@ -2428,7 +2428,7 @@ def find_secured_as_of_prelock(spark, sf_dir):
     pins both directions at the driver level (tests pin them locally,
     tests/test_meta_plane.py). Same serving shape: one rid-keyed
     max_by over the seq-pruned metadata log, session-cached per
-    snapshot, chained from the nearest cached earlier snapshot."""
+    snapshot, chained from the nearest durable earlier snapshot."""
     return _asof_filtered_find(
         spark,
         sf_dir,

@@ -25,6 +25,15 @@ history:
   pruned delta (the durable twin of the session-cache chained
   advance), so a sequence of snapshot reads is delta-proportional,
   never repeatedly horizon-proportional.
+- **No cached as-of sidecar reads the serving log.** Spark drops the
+  cached buffers of every persisted plan that reads a path it then
+  writes to, and each :func:`stream_maintained_log` drain writes the
+  log. A session-cached sidecar with :func:`log_between` in its
+  lineage would be un-cached by every drain, recomputed from its whole
+  chain on the next read, and broken by :func:`purge_log`. So the
+  session-cached families read the durable artifacts
+  (``api.asof_live_state``), and the chained text-index sidecars are
+  checkpointed before they are cached (``api.asof_text_index``).
 - **Vacuum**: :func:`vacuum_family` folds a family's history at or
   below a horizon into a durable base state (the
   :class:`~nucliadb_spark.streaming.ingest.VacuumedLog` algebra,

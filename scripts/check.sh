@@ -1,6 +1,7 @@
 #!/bin/sh
 # Fast pre-commit gate: registry bookkeeping invariants + driver
-# contract (hashable schemas, oracle pairing). Runs in seconds —
+# contract (hashable schemas, oracle pairing), then the benchmark's
+# own tests (perfbench/tests, no Spark). Runs in seconds —
 # REQUIRED before any commit that touches nucliadb_spark/registry.py
 # or a plans/queries_*.py module (the driver-unreachable-query bug
 # shipped three rounds in a row before this gate existed: r5=29,
@@ -23,3 +24,5 @@ assert not unpaired, f"queries without an oracle twin: {unpaired}"
 print(f"OK: {len(qs)} queries registered == {len(pri)} PRIORITY seats; "
       f"all oracle-paired; window = PRIORITY[:50] ends at {pri[49]!r}")
 EOF
+# the benchmark's own tests: no Spark, seconds
+python3 -m pytest perfbench/tests -q
