@@ -10,11 +10,11 @@ fusion skip R3, legacy filter translation F8, reranker R5).
 
 from __future__ import annotations
 
-from collections import OrderedDict
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from nucliadb_spark.cache import memo_plan
 from nucliadb_spark.functions import frames, models
 from nucliadb_spark.operators import bm25, fusion, knn
 from nucliadb_spark.operators.filters import Expr
@@ -518,32 +518,10 @@ def asof_live_state(
     )
 
 
-# Request-plan memo (r15, guide §5 driver overhead): building a
-# flagship request's DataFrame costs 50-200 ms of pure driver work
-# (plane classification, scope resolution, leg assembly, analysis) —
-# at ~1 s serving latencies that is 10-20% fixed overhead paid again
-# for every repeat of the SAME request. The memo stores the BUILT
-# plan handle keyed on the full request VALUE (dataclass repr — every
-# field of FindRequest and its nested filter/prequery trees), the
-# sf_dir and the Spark application id, so it works for any request
-# shape, never outlives the session, and never stores results: every
-# collect() re-executes the plan against the parquet inputs.
-_REQUEST_MEMO: OrderedDict[tuple[str, str, str], DataFrame] = OrderedDict()
-_REQUEST_MEMO_MAX = 256
-
-
 def find_request(spark: SparkSession, sf_dir: str, req: FindRequest) -> DataFrame:
-    """Execute a FindRequest → (id, score, matched_sources)."""
-    key = (spark.sparkContext.applicationId, sf_dir, repr(req))
-    hit = _REQUEST_MEMO.get(key)
-    if hit is not None:
-        _REQUEST_MEMO.move_to_end(key)
-        return hit
-    df = _build_find_request(spark, sf_dir, req)
-    _REQUEST_MEMO[key] = df
-    while len(_REQUEST_MEMO) > _REQUEST_MEMO_MAX:
-        _REQUEST_MEMO.popitem(last=False)
-    return df
+    """Execute a FindRequest → (id, score, matched_sources). Repeats
+    of an equal request reuse the built plan (``cache.memo_plan``)."""
+    return memo_plan(spark, sf_dir, req, lambda: _build_find_request(spark, sf_dir, req))
 
 
 def _build_find_request(

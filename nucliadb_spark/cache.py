@@ -28,10 +28,32 @@ families (per-snapshot as-of sidecars keyed by seq) are unpinned and
 age out. Single-threaded by design: Spark driver-side query
 construction in this engine happens on one thread; the counters are
 plain ints.
+
+Two memos sit next to the sidecar cache, both per Spark application:
+
+- **The plan memo** (:func:`memo_plan`, LRU of ``PLAN_MAX`` = 256
+  entries) holds BUILT plan handles of ``api.find_request`` and
+  ``operators.find.find``, keyed by the request's VALUE: dataclasses
+  as (type, fields), dicts regardless of insertion order, lists as
+  tuples, DataFrame arguments by identity (the entry holds them).
+  Building a flagship request costs 50-200 ms of driver work; a
+  repeat pays a key walk of microseconds. It never stores results:
+  every collect() re-executes. A request holding any other object
+  builds fresh. ``serving.vacuum_family`` and ``serving.purge_log``
+  drop every plan entry, so a repeated request rebuilds and meets
+  ``serving.check_horizon`` like a fresh one — a memoized plan must
+  never answer a snapshot the vacuum discarded.
+- **The session memo** (:func:`cached_value`, unbounded) holds
+  immutable per-application values: table reader frames (each
+  ``spark.read.parquet`` re-lists the table and re-reads footers as
+  a job at construction time), parquet schemas, index statistics and
+  scratch directories. The names form a small fixed set.
 """
 
 from __future__ import annotations
 
+import dataclasses
+import datetime
 import os
 from collections import OrderedDict
 from collections.abc import Callable
@@ -58,12 +80,13 @@ _SIZE_DEFAULT = 1 << 20  # 1 MiB
 
 
 class _Entry:
-    __slots__ = ("df", "pinned", "size", "born")
+    __slots__ = ("df", "pinned", "size", "final", "born")
 
     def __init__(self, df: DataFrame, pinned: bool, born: int):
         self.df = df
         self.pinned = pinned
-        self.size: int | None = None  # probed lazily, once
+        self.size: int | None = None  # probed lazily
+        self.final = False  # size read from the materialized buffers
         self.born = born
 
 
@@ -85,16 +108,29 @@ def reset_stats() -> None:
 def _probe_size(df: DataFrame) -> int:
     """Entry size in bytes from the optimized plan's statistics —
     actual cached bytes once the InMemoryRelation materialized, the
-    child estimate before that (clamped to the default when absurd)."""
+    child estimate before that (clamped to the default when absurd).
+    The plan memoizes its statistics, so they are dropped first: a
+    re-probe after materialization must not read the old estimate."""
     try:
-        raw = int(
-            str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        )
+        plan = df._jdf.queryExecution().optimizedPlan()
+        plan.invalidateStatsCache()
+        raw = int(str(plan.stats().sizeInBytes()))
     except Exception:  # noqa: BLE001
         return _SIZE_DEFAULT
     if raw <= 0 or raw > _SIZE_CLAMP:
         return _SIZE_DEFAULT
     return raw
+
+
+def _materialized(df: DataFrame) -> bool:
+    """True once every partition of the entry's cached buffers is
+    built, so a size probe reads actual bytes — or when the plan is
+    not a cache relation, whose probe can never read anything else."""
+    try:
+        plan = df._jdf.queryExecution().optimizedPlan()
+        return bool(plan.cacheBuilder().isCachedColumnBuffersLoaded())
+    except Exception:  # noqa: BLE001
+        return True
 
 
 def cached_names(spark, sf_dir: str) -> list[str]:
@@ -149,10 +185,14 @@ def _enforce_budget() -> None:
     """Probe sizes of entries that have aged one insert (a query ran
     between the inserts, so their storage is normally materialized by
     now), then evict unpinned LRU entries while the unpinned total
-    exceeds MAX_BYTES."""
+    exceeds MAX_BYTES. An entry probed before it materialized (two
+    inserts back to back) holds the optimizer's estimate, which can
+    be huge; it is probed again until the reading is final."""
     for e in _CACHE.values():
-        if e.size is None and e.born < _INSERTS:
-            e.size = _probe_size(e.df)
+        if e.born < _INSERTS and not e.final:
+            done = _materialized(e.df)
+            if done or e.size is None:
+                e.size, e.final = _probe_size(e.df), done
     total = sum(e.size or 0 for e in _CACHE.values() if not e.pinned)
     if total <= MAX_BYTES:
         return
@@ -181,15 +221,75 @@ def clear() -> None:
     _CACHE.clear()
 
 
-_SCALARS: dict[tuple[str, str, str], object] = {}
+_VALUES: dict[tuple[str, str, str], object] = {}
 
 
-def cached_scalar(df: DataFrame, sf_dir: str, name: str, compute: Callable[[], object]):
-    """Session-scoped scalar sidecar (e.g. the corpus doc count used
-    by the prefilter All/None fast path) — an index-build statistic,
-    not per-query work."""
-    app = df.sparkSession.sparkContext.applicationId
-    key = (app, sf_dir, name)
-    if key not in _SCALARS:
-        _SCALARS[key] = compute()
-    return _SCALARS[key]
+def cached_value(spark, sf_dir: str, name: str, build: Callable[[], object]):
+    """Session get-or-build for an IMMUTABLE per-application value:
+    reader frames and schemas of the testdata tables, index-build
+    statistics (the graph node count), per-session scratch
+    directories. Unbounded: the names are a small fixed set per
+    corpus."""
+    key = (spark.sparkContext.applicationId, sf_dir, name)
+    if key not in _VALUES:
+        _VALUES[key] = build()
+    return _VALUES[key]
+
+
+PLAN_MAX = 256
+# (applicationId, sf_dir, request key) -> (plan, frames the key named)
+_PLANS: OrderedDict[tuple, tuple[DataFrame, tuple[DataFrame, ...]]] = OrderedDict()
+
+
+class _Unkeyable(Exception):
+    pass
+
+
+_PRIMITIVES = (type(None), bool, int, float, str, datetime.date)
+
+
+def _canon(v, frames: list[DataFrame]):
+    """Canonical hashable form of a request value."""
+    if isinstance(v, _PRIMITIVES):
+        return v
+    if isinstance(v, DataFrame):
+        frames.append(v)
+        return (DataFrame, id(v))
+    # only a class the @dataclass decorator processed itself: a plain
+    # subclass of one may carry state its fields do not show
+    if "__dataclass_fields__" in vars(type(v)):
+        return (type(v), tuple(_canon(getattr(v, f.name), frames) for f in dataclasses.fields(v)))
+    if isinstance(v, dict):
+        return (dict, frozenset((_canon(k, frames), _canon(x, frames)) for k, x in v.items()))
+    if isinstance(v, (list, tuple)):
+        return tuple(_canon(x, frames) for x in v)
+    raise _Unkeyable
+
+
+def memo_plan(spark, sf_dir: str, request, build: Callable[[], DataFrame]) -> DataFrame:
+    """The built plan for ``request``, from the plan memo when an equal
+    request was built before in this session. ``request`` is keyed by
+    value; a request holding anything that cannot be keyed (an object
+    that is not a dataclass, e.g. a plain ``Expr`` subclass) builds
+    fresh every time."""
+    frames: list[DataFrame] = []
+    try:
+        key = (spark.sparkContext.applicationId, sf_dir, _canon(request, frames))
+    except _Unkeyable:
+        return build()
+    hit = _PLANS.get(key)
+    if hit is not None:
+        _PLANS.move_to_end(key)
+        return hit[0]
+    df = build()
+    # the entry holds the frames the key names by id(), so a recycled
+    # id() cannot alias a different frame while the entry lives
+    _PLANS[key] = (df, tuple(frames))
+    while len(_PLANS) > PLAN_MAX:
+        _PLANS.popitem(last=False)
+    return df
+
+
+def drop_plans() -> None:
+    """Forget every memoized plan: serving state moved under them."""
+    _PLANS.clear()

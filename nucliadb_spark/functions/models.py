@@ -18,7 +18,7 @@ from __future__ import annotations
 import hashlib
 
 import pandas as pd
-from pyspark.sql import Column, functions as F
+from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType
 
 STUB_DIM = 8  # 32 md5 hex chars / 4 per component
@@ -65,11 +65,6 @@ def stub_reranker_sql(query_lit: str, text_expr: str) -> str:
     return (
         f"(CAST(('0x' || substring(md5({pair}), 1, 8)) AS BIGINT) / 4294967295.0)"
     )
-
-
-def embed_column(text_col: str | Column) -> Column:
-    c = F.col(text_col) if isinstance(text_col, str) else text_col
-    return stub_embedding(c)
 
 
 # --- detected entities (the /predict detect-entities boundary) --------------

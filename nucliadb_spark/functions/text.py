@@ -50,14 +50,6 @@ def tokenize_py(text: str) -> list[str]:
     return [t for t in re.split(TOKEN_SPLIT_RE, text.lower()) if t]
 
 
-def token_count(col: Column | str) -> Column:
-    return F.size(tokenize(col))
-
-
-def token_count_sql(expr: str) -> str:
-    return f"len({tokenize_sql(expr)})"
-
-
 # --- normalization (diacritics-insensitive match; ref:
 # nidx/nidx_relation/src/schema.rs `normalize`) ------------------------
 
@@ -65,10 +57,6 @@ def token_count_sql(expr: str) -> str:
 def normalize(col: Column | str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     return F.lower(F.trim(c))
-
-
-def normalize_sql(expr: str) -> str:
-    return f"lower(trim({expr}))"
 
 
 # --- fingerprint (exact-dup detection; md5 agrees between Spark and
@@ -81,10 +69,6 @@ def fingerprint(col: Column | str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     canon = F.regexp_replace(F.lower(F.trim(c)), r"\s+", " ")
     return F.md5(canon)
-
-
-def fingerprint_sql(expr: str) -> str:
-    return f"md5(regexp_replace(lower(trim({expr})), '\\s+', ' ', 'g'))"
 
 
 # --- shingles (word n-grams) for Jaccard / MinHash dedup ---------------
@@ -132,16 +116,6 @@ def word_shingles_sql(expr: str, n: int = 3) -> str:
     return (
         f"[array_to_string(list_slice({toks}, i, i + {n - 1}), ' ') "
         f"for i in range(1, greatest(len({toks}) - {n - 1}, 0) + 1)]"
-    )
-
-
-def char_ngrams(col: Column | str, n: int = 4) -> Column:
-    """Character n-grams of the normalized text (for fuzzy-ish dedup)."""
-    c = F.col(col) if isinstance(col, str) else col
-    canon = F.regexp_replace(F.lower(c), r"\s+", " ")
-    return F.transform(
-        F.sequence(F.lit(1), F.greatest(F.length(canon) - F.lit(n - 1), F.lit(0))),
-        lambda i: F.substring(canon, i, n),  # type: ignore[arg-type]
     )
 
 

@@ -41,15 +41,6 @@ def l2_normalize(a: Column) -> Column:
     return F.transform(a, lambda x: x.cast("double") / n)
 
 
-def dot_sql(a: str, b: str) -> str:
-    """DuckDB equivalent (list_dot_product over DOUBLE[] lists)."""
-    return f"list_dot_product({a}::DOUBLE[], {b}::DOUBLE[])"
-
-
-def cosine_sql(a: str, b: str) -> str:
-    return f"list_cosine_similarity({a}::DOUBLE[], {b}::DOUBLE[])"
-
-
 # --- unrolled twins ------------------------------------------------------
 # DuckDB's list_dot_product/list_cosine_similarity may accumulate in a
 # different order than Spark's F.aggregate fold; for bit-exact oracle
@@ -74,11 +65,3 @@ def cosine_sql_unrolled(a: str, b: str, dim: int) -> str:
         f"({dot_sql_unrolled(a, b, dim)} / "
         f"({norm_sql_unrolled(a, dim)} * {norm_sql_unrolled(b, dim)}))"
     )
-
-
-def lit_vector(values: list[float]) -> Column:
-    return F.array(*[F.lit(float(v)) for v in values])
-
-
-def sql_vector(values: list[float]) -> str:
-    return "[" + ", ".join(repr(float(v)) for v in values) + "]"

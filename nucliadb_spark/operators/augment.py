@@ -120,19 +120,6 @@ ORDER BY hit_key, position
 """
 
 
-def hierarchy_context(hits: DataFrame, resources: DataFrame) -> DataFrame:
-    """Prepend resource title to each hit (hierarchy strategy)."""
-    return hits.join(
-        F.broadcast(resources.select("rid", "title")), hits["rid"] == resources["rid"]
-    ).select(hits["rid"].alias("rid"), "title", hits["paragraph_id"], hits["text"])
-
-
-def full_resource_context(paragraphs: DataFrame, hits: DataFrame) -> DataFrame:
-    """Expand hits to all paragraphs of their resources."""
-    rids = hits.select("rid").distinct()
-    return paragraphs.join(F.broadcast(rids), "rid", "semi").orderBy("paragraph_id")
-
-
 # --- /augment endpoint: hydration-by-id with prop selectors ----------------
 # ref: nucliadb/src/nucliadb/search/api/v1/augment.py (AugmentRequest →
 # AugmentResources / AugmentParagraphs with SelectProp lists:

@@ -184,16 +184,6 @@ def build_index(fields: DataFrame, path: str, n_buckets: int = TERM_BUCKETS) -> 
     vocabulary(post).write.mode("overwrite").parquet(f"{path}/vocab")
 
 
-def read_index(spark, path: str) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """(postings, docstats, vocab) back from a built index. postings
-    keeps its `tb` partition column so term probes prune."""
-    return (
-        spark.read.parquet(f"{path}/postings"),
-        spark.read.parquet(f"{path}/docstats"),
-        spark.read.parquet(f"{path}/vocab"),
-    )
-
-
 # --- scoring ------------------------------------------------------------
 
 

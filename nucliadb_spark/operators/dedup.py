@@ -37,7 +37,6 @@ from nucliadb_spark.functions.text import (
     md5_int60_sql,
     tokenize,
     tokenize_sql,
-    word_shingles,
     word_shingles_from_tokens,
     word_shingles_sql,
 )
@@ -62,10 +61,6 @@ def token_set_fingerprint_sql(expr: str) -> str:
     return (
         f"md5(array_to_string(list_sort(list_distinct({tokenize_sql(expr)})), ' '))"
     )
-
-
-def distinct_shingles(col, n: int = 3) -> F.Column:
-    return F.array_sort(F.array_distinct(word_shingles(col, n)))
 
 
 def _shingled(corpus: DataFrame, shingle: int) -> DataFrame:

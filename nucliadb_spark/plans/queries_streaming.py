@@ -108,7 +108,7 @@ def _cdc_facet_counter_sidecar(spark, sf_dir):
     from the materialized (facet, delta) partials."""
     import tempfile
 
-    from nucliadb_spark.cache import cached_df, cached_scalar
+    from nucliadb_spark.cache import cached_df, cached_value
 
     res = tpch.resources(spark, sf_dir)
 
@@ -120,7 +120,7 @@ def _cdc_facet_counter_sidecar(spark, sf_dir):
         )
         return workdir
 
-    wd = cached_scalar(res, sf_dir, "fctr_workdir", build)
+    wd = cached_value(spark, sf_dir, "fctr_workdir", build)
     return cached_df(
         sf_dir,
         "fctr_counters",
@@ -211,7 +211,7 @@ def facet_counter_compaction(spark, sf_dir):
 
     from pyspark.sql import functions as F
 
-    from nucliadb_spark.cache import cached_scalar
+    from nucliadb_spark.cache import cached_value
 
     res = tpch.resources(spark, sf_dir)
 
@@ -224,7 +224,7 @@ def facet_counter_compaction(spark, sf_dir):
         ingest.compact_facet_counters(spark, f"{workdir}/counters")
         return workdir
 
-    wd = cached_scalar(res, sf_dir, "fctr_cmp_workdir", build)
+    wd = cached_value(spark, sf_dir, "fctr_cmp_workdir", build)
     compacted = spark.read.parquet(f"{wd}/counters")
     return compacted.agg(
         F.count("*").cast("long").alias("n_facet_rows_compacted"),
@@ -284,7 +284,7 @@ def _fctr_asof_sidecar(spark, sf_dir):
     the log; at scale it is the seq-partitioned log table)."""
     import tempfile
 
-    from nucliadb_spark.cache import cached_df, cached_scalar
+    from nucliadb_spark.cache import cached_df, cached_value
 
     res = tpch.resources(spark, sf_dir)
 
@@ -300,7 +300,7 @@ def _fctr_asof_sidecar(spark, sf_dir):
         )
         return workdir
 
-    wd = cached_scalar(res, sf_dir, "fctr_asof_workdir", build)
+    wd = cached_value(spark, sf_dir, "fctr_asof_workdir", build)
     partials = cached_df(
         sf_dir,
         "fctr_asof_partials",
@@ -696,7 +696,7 @@ def _cdc_relation_served_index(spark, sf_dir):
     fielded/vector served indexes."""
     import tempfile
 
-    from nucliadb_spark.cache import cached_scalar
+    from nucliadb_spark.cache import cached_value
 
     rel = tpch.relations(spark, sf_dir)
 
@@ -710,7 +710,7 @@ def _cdc_relation_served_index(spark, sf_dir):
         )
         return workdir
 
-    wd = cached_scalar(rel, sf_dir, "rcdc_workdir", build)
+    wd = cached_value(spark, sf_dir, "rcdc_workdir", build)
     edges = spark.read.parquet(f"{wd}/index/edges")
     oplog = spark.read.parquet(f"{wd}/index/oplog")
     return edges, oplog
@@ -1094,7 +1094,7 @@ def _refresh_workdir(spark, sf_dir):
 
     from pyspark.sql import functions as F
 
-    from nucliadb_spark.cache import cached_df, cached_scalar
+    from nucliadb_spark.cache import cached_df, cached_value
     from nucliadb_spark.operators import ann as ann_ops
 
     vectors = tpch.vectors(spark, sf_dir)
@@ -1125,7 +1125,7 @@ def _refresh_workdir(spark, sf_dir):
             v2.write.parquet(f"{workdir}/centroids_v2")
         return workdir
 
-    return cached_scalar(vectors, sf_dir, "refresh_workdir", build)
+    return cached_value(spark, sf_dir, "refresh_workdir", build)
 
 
 def _refresh_report_oracle() -> str:
@@ -2830,7 +2830,7 @@ def find_hybrid_as_of_vacuumed(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from nucliadb_spark import api, serving
-    from nucliadb_spark.cache import cached_scalar
+    from nucliadb_spark.cache import cached_value
 
     fields = tpch.fields(spark, sf_dir)
 
@@ -2851,7 +2851,7 @@ def find_hybrid_as_of_vacuumed(spark, sf_dir):
                 shutil.copy(src, os.path.join(d, f))
         return d
 
-    vdir = cached_scalar(fields, sf_dir, "vac_twin_dir", make_private_corpus)
+    vdir = cached_value(spark, sf_dir, "vac_twin_dir", make_private_corpus)
     for fam, lname, lb, res, keys in _substrate_families(spark, vdir):
         serving.vacuum_family(
             spark, vdir, fam, lb, res, keys, _SERVE_VACUUM_H,
@@ -2913,7 +2913,7 @@ def cdc_substrate_stream_served(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from nucliadb_spark import serving
-    from nucliadb_spark.cache import cached_scalar
+    from nucliadb_spark.cache import cached_value
 
     fields = tpch.fields(spark, sf_dir)
     log_name = "content_text_streamed"
@@ -2932,7 +2932,7 @@ def cdc_substrate_stream_served(spark, sf_dir):
         serving.stream_maintained_log(spark, sf_dir, log_name, arrivals, ckpt)
         return True
 
-    cached_scalar(fields, sf_dir, "substrate_stream_maintained", maintain)
+    cached_value(spark, sf_dir, "substrate_stream_maintained", maintain)
 
     def state(seq: int):
         return serving.state_as_of(
@@ -2961,7 +2961,7 @@ def _cdc_vector_served_index(spark, sf_dir):
     vector sibling of _cdc_fielded_served_index."""
     import tempfile
 
-    from nucliadb_spark.cache import cached_df, cached_scalar
+    from nucliadb_spark.cache import cached_df, cached_value
     from nucliadb_spark.operators import ann as ann_ops
 
     vectors = tpch.vectors(spark, sf_dir)
@@ -2980,7 +2980,7 @@ def _cdc_vector_served_index(spark, sf_dir):
         )
         return workdir
 
-    wd = cached_scalar(vectors, sf_dir, "vcdc_workdir", build)
+    wd = cached_value(spark, sf_dir, "vcdc_workdir", build)
     vecs = spark.read.parquet(f"{wd}/index/vectors")
     oplog = spark.read.parquet(f"{wd}/index/oplog")
     return vecs, oplog
@@ -3025,7 +3025,7 @@ def _cdc_meta_served_index(spark, sf_dir):
     of _cdc_vector_served_index."""
     import tempfile
 
-    from nucliadb_spark.cache import cached_scalar
+    from nucliadb_spark.cache import cached_value
 
     fields = tpch.fields(spark, sf_dir)
 
@@ -3039,7 +3039,7 @@ def _cdc_meta_served_index(spark, sf_dir):
         )
         return workdir
 
-    wd = cached_scalar(fields, sf_dir, "mcdc_workdir", build)
+    wd = cached_value(spark, sf_dir, "mcdc_workdir", build)
     meta = spark.read.parquet(f"{wd}/index/meta")
     oplog = spark.read.parquet(f"{wd}/index/oplog")
     return meta, oplog
@@ -3098,7 +3098,7 @@ def _cdc_fielded_served_index(spark, sf_dir):
     deletion lists, never the raw corpus."""
     import tempfile
 
-    from nucliadb_spark.cache import cached_scalar
+    from nucliadb_spark.cache import cached_value
 
     fm = tpch.fields_multi(spark, sf_dir)
 
@@ -3111,7 +3111,7 @@ def _cdc_fielded_served_index(spark, sf_dir):
         )
         return workdir
 
-    wd = cached_scalar(fm, sf_dir, "cdcf_workdir", build)
+    wd = cached_value(spark, sf_dir, "cdcf_workdir", build)
     post = spark.read.parquet(f"{wd}/index/postings")
     oplog = spark.read.parquet(f"{wd}/index/oplog")
     return post, oplog
@@ -3184,7 +3184,7 @@ def _cdc_fielded_compacted_index(spark, sf_dir):
     sidecars must keep their files."""
     import tempfile
 
-    from nucliadb_spark.cache import cached_scalar
+    from nucliadb_spark.cache import cached_value
 
     fm = tpch.fields_multi(spark, sf_dir)
 
@@ -3197,7 +3197,7 @@ def _cdc_fielded_compacted_index(spark, sf_dir):
         ingest.autocompact_fielded_index(spark, f"{workdir}/index")
         return workdir
 
-    wd = cached_scalar(fm, sf_dir, "cdcfc_workdir", build)
+    wd = cached_value(spark, sf_dir, "cdcfc_workdir", build)
     post = spark.read.parquet(f"{wd}/index/postings")
     oplog = spark.read.parquet(f"{wd}/index/oplog")
     return post, oplog

@@ -770,7 +770,7 @@ def graph_pagerank(spark, sf_dir):
     oracle unrolls the same fixed iterations as nested CTEs. The
     centrality signal a graph RAG strategy can use to pick entry
     points (ref graph_strategy.py's scored-entity selection)."""
-    from nucliadb_spark.cache import cached_df, cached_scalar
+    from nucliadb_spark.cache import cached_df, cached_value
     from nucliadb_spark.operators.iterative import graph_adjacency, pagerank
 
     rel = tpch.relations_index(spark, sf_dir)
@@ -800,7 +800,7 @@ def graph_pagerank(spark, sf_dir):
         spark=spark,
         pinned=True,
     )
-    n = cached_scalar(nodes, sf_dir, "graph_n_nodes", lambda: nodes.count())
+    n = cached_value(spark, sf_dir, "graph_n_nodes", lambda: nodes.count())
     return pagerank(rel, adjacency=(e, nodes, out), n_nodes=n)
 
 

@@ -71,6 +71,7 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from nucliadb_spark import cache
 from nucliadb_spark.streaming import ingest
 
 SEQ_BUCKET_WIDTH = 250_000
@@ -278,7 +279,10 @@ def check_horizon(
     """Raise the pinned-snapshot error for a read below the family's
     vacuum horizon — the same contract asof_from_vacuum enforces,
     checked up-front so even a session-cached serving path cannot
-    answer a seq whose history the vacuum discarded."""
+    answer a seq whose history the vacuum discarded. Every as-of
+    request build passes here, and a memoized request plan cannot
+    skip it: :func:`vacuum_family` and :func:`purge_log` drop the
+    plan memo, so the next request rebuilds and is checked."""
     h = horizon(spark, sf_dir, family)
     if seq < h:
         raise ValueError(
@@ -449,6 +453,7 @@ def vacuum_family(
     new_path = os.path.join(d, f"base_h{new_horizon}")
     new_base.write.mode("overwrite").parquet(new_path)
     _HORIZONS[_key(spark, sf_dir, family)] = new_horizon
+    cache.drop_plans()
     if old != NO_HORIZON:
         shutil.rmtree(os.path.join(d, f"base_h{old}"), ignore_errors=True)
 
@@ -482,6 +487,7 @@ def purge_log(
             "vacuum_family them first (their base states are what "
             "replaces the deleted history)"
         )
+    cache.drop_plans()
     d = _LOG_DIRS.get(key)
     if d is None:
         return 0

@@ -24,5 +24,30 @@ assert not unpaired, f"queries without an oracle twin: {unpaired}"
 print(f"OK: {len(qs)} queries registered == {len(pri)} PRIORITY seats; "
       f"all oracle-paired; window = PRIORITY[:50] ends at {pri[49]!r}")
 EOF
+# unreferenced helpers: every top-level function under nucliadb_spark/
+# must be named somewhere besides its own def (a word match over the
+# package, tests/, bench.py, perfbench/, scripts/ and the entry module)
+python - <<'EOF'
+import ast
+import collections
+import pathlib
+import re
+
+pkg = sorted(pathlib.Path("nucliadb_spark").rglob("*.py"))
+scanned = pkg + [
+    p for d in ("tests", "perfbench", "scripts") for p in pathlib.Path(d).rglob("*") if p.is_file()
+] + [pathlib.Path("bench.py"), pathlib.Path("__spark_entry__.py")]
+words = collections.Counter()
+for p in scanned:
+    words.update(re.findall(r"\w+", p.read_text(errors="ignore")))
+dead = [
+    f"{p}:{n.lineno} {n.name}"
+    for p in pkg
+    for n in ast.parse(p.read_text()).body
+    if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef)) and words[n.name] < 2
+]
+assert not dead, "top-level functions referenced nowhere:\n" + "\n".join(dead)
+print(f"OK: every top-level function in {len(pkg)} package modules is referenced")
+EOF
 # the benchmark's own tests: no Spark, seconds
 python3 -m pytest perfbench/tests -q

@@ -28,7 +28,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 from pyspark.sql import functions as F  # noqa: E402
 
 from nucliadb_spark.session import get_session  # noqa: E402
-from nucliadb_spark.cache import cached_df, cached_scalar  # noqa: E402
+from nucliadb_spark.cache import cached_df, cached_value  # noqa: E402
 from nucliadb_spark.operators.iterative import graph_adjacency  # noqa: E402
 from nucliadb_spark.sources import tpch  # noqa: E402
 
@@ -141,7 +141,7 @@ def main() -> None:
             lambda: e.groupBy("a").agg(F.count("*").cast("double").alias("deg")),
             spark=spark,
         )
-        n = cached_scalar(nodes, SF_DIR, "graph_n_nodes", lambda: nodes.count())
+        n = cached_value(spark, SF_DIR, "graph_n_nodes", lambda: nodes.count())
         print("edges", e.count(), "nodes", n, flush=True)
         for run in range(3):
             t0 = time.perf_counter()

@@ -85,3 +85,40 @@ def test_cache_reset_stats():
     cache.EVICTIONS = 7
     cache.reset_stats()
     assert cache.EVICTIONS == 0
+
+
+def test_estimate_billed_entries_are_reprobed_once_materialized(spark, monkeypatch):
+    """Inserts back to back probe the earlier entries before any job
+    filled them, so they are billed at the optimizer's estimate. Once
+    the entries materialize they must be billed at their actual size:
+    a stale estimate would keep evicting every other unpinned entry."""
+    cache.clear()
+    cache.reset_stats()
+    estimate, actual = 6 << 20, 1 << 20
+    monkeypatch.setattr(cache, "MAX_BYTES", 16 << 20)
+    monkeypatch.setattr(
+        cache,
+        "_probe_size",
+        lambda df: actual
+        if df._jdf.queryExecution().optimizedPlan().cacheBuilder().isCachedColumnBuffersLoaded()
+        else estimate,
+    )
+
+    def put(name, lo):
+        return cache.cached_df(
+            "sf", name, lambda: spark.range(lo, lo + 10), spark=spark
+        )
+
+    # back to back: the third insert probes both hot entries before
+    # any job filled them
+    frames = [put("hot0", 0), put("hot1", 100), put("warm", 200)]
+    assert cache.EVICTIONS == 0
+    for df in frames:
+        df.count()
+    for i in range(6):
+        put(f"entry{i}", 1000 + 100 * i).count()
+        put("hot0", 0)  # hits keep the hot entries most recent
+        put("hot1", 100)
+    assert cache.EVICTIONS == 0
+    assert all(e.size == actual for e in cache._CACHE.values() if e.size is not None)
+    cache.clear()

@@ -3,8 +3,10 @@ legacy filters, reranker window — the planner rules working together
 in the real pipeline."""
 
 import pytest
+from pyspark.sql import functions as F
 
 from nucliadb_spark import api
+from nucliadb_spark.operators.filters import Expr, Facet
 from nucliadb_spark.operators import bm25
 from nucliadb_spark.plans import planner
 from nucliadb_spark.sources import tpch
@@ -1089,6 +1091,16 @@ def test_request_plan_memo_reuses_plan_not_results(spark, sf_dir):
     a = api.find_request(spark, sf_dir, req())
     b = api.find_request(spark, sf_dir, req())
     assert a is b  # memo hit on an equal-valued fresh request object
+    # dict-valued fields key by value, not by insertion order
+    dicts = lambda order: api.FindRequest(  # noqa: E731
+        query="europe asia shipment",
+        top_k=5,
+        synonyms=dict(order([("europe", ["eu"]), ("asia", ["orient"])])),
+        fusion_weights=dict(order([("keyword", 1.0), ("semantic", 0.5)])),
+    )
+    assert api.find_request(spark, sf_dir, dicts(list)) is api.find_request(
+        spark, sf_dir, dicts(lambda kv: list(reversed(kv)))
+    )
     other = api.find_request(
         spark, sf_dir, api.FindRequest(query="europe asia shipment",
                                        features=["keyword"], top_k=7)
@@ -1098,3 +1110,40 @@ def test_request_plan_memo_reuses_plan_not_results(spark, sf_dir):
     assert a.collect() == api._build_find_request(
         spark, sf_dir, req()
     ).collect()
+
+
+class _EvenRid(Expr):
+    """A filter node that is NOT a dataclass: its default repr names
+    its memory address, so a plan memo keyed on repr could alias it
+    with another node that reuses the address."""
+
+    def to_column(self):
+        return F.col("rid") % 2 == 0
+
+
+def test_non_dataclass_filter_never_hits_the_plan_memo(spark, sf_dir):
+    """A request holding a filter node the memo cannot key by value
+    builds fresh every time — in api.find_request and in
+    operators.find.find — and still answers correctly."""
+    from nucliadb_spark.operators import find
+
+    first, second = _EvenRid(), _EvenRid()
+    reqs = [
+        api.FindRequest(query="merge sort", features=["keyword"], top_k=5, filters=f)
+        for f in (first, second, first)
+    ]
+    plans = [api.find_request(spark, sf_dir, r) for r in reqs]
+    assert len({id(p) for p in plans}) == 3
+    rows = plans[2].collect()
+    assert rows and all(r.id % 2 == 0 for r in rows)
+
+    direct = [
+        find.find(spark, sf_dir, "merge sort", top_k=5, prefilter=f)
+        for f in (first, second, first)
+    ]
+    assert len({id(p) for p in direct}) == 3
+    # a value-keyed prefilter still hits
+    facet = lambda: find.find(  # noqa: E731
+        spark, sf_dir, "merge sort", top_k=5, prefilter=Facet("/s/p/en")
+    )
+    assert facet() is facet()

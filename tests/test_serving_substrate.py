@@ -161,6 +161,26 @@ def test_find_request_below_horizon_raises(spark, iso_dir):
         ).collect()
 
 
+def test_memoized_find_request_refuses_after_vacuum(spark, tmp_path_factory, sf_dir):
+    """A request built and collected at a snapshot, then repeated after
+    vacuum_family folded past that snapshot, raises exactly like a
+    fresh build: the vacuum drops the plan memo, so the repeat cannot
+    answer from a plan built before the history was discarded. Runs on
+    its own corpus copy (the module's copy keeps its horizon at H)."""
+    d = str(tmp_path_factory.mktemp("memo_sf"))
+    for f in os.listdir(sf_dir):
+        if f.endswith(".parquet"):
+            shutil.copy(os.path.join(sf_dir, f), os.path.join(d, f))
+    req = lambda: api.FindRequest(  # noqa: E731 — a fresh equal value each call
+        query="refreshed revision stream", features=["keyword"], top_k=5, as_of=300_000
+    )
+    assert api.find_request(spark, d, req()).collect()
+    lb, res = _content(spark, d)
+    serving.vacuum_family(spark, d, "content_text", lb, res, ("rid",), H)
+    with pytest.raises(ValueError, match="below the vacuum horizon"):
+        api.find_request(spark, d, req()).collect()
+
+
 def test_late_family_on_purged_log_raises(spark, iso_dir):
     """A family first read AFTER its shared log was purged has no
     base covering the deleted partitions — computing its state from
